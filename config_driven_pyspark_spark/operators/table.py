@@ -1393,19 +1393,20 @@ class _WriterLock:
     """Partition-scoped writer mutex for the table family (r13 —
     VERDICT r12 ask #4; ADVICE r12 renewal/ownership fixes retained).
 
-    Each acquirer atomically creates its OWN entry file
-    ``<base>__lock.d/<owner>.json`` recording its scope — a sorted list
-    of the partition directories its swap will touch, or ``null`` for
-    the whole table (full rewrites, recovery, restore) — then lists
-    the directory: any OTHER live entry whose scope intersects is a
-    conflict. Two scoped merges on DISJOINT partitions therefore both
-    proceed; overlapping scopes (or anything vs a global entry) fail
-    loudly. Conflict resolution is deliberately CONSERVATIVE: on a
-    simultaneous-acquire race, both writers see each other and both
-    back off (delete own entry, raise) — a rare both-fail is safe and
-    retryable, two winners never happen. The normal sequential case
-    needs no tie-break: the holder's entry exists first, the
-    latecomer sees it and fails.
+    Each acquirer atomically publishes its OWN entry file
+    ``<base>__lock.d/<owner>.json`` (written as ``<owner>.tmp``, then
+    renamed, so no scan ever reads a half-written entry) recording its
+    scope — a sorted list of the partition directories its swap will
+    touch, or ``null`` for the whole table (full rewrites, recovery,
+    restore) — then lists the directory: any OTHER live entry whose
+    scope intersects is a conflict. Two scoped merges on DISJOINT
+    partitions therefore both proceed; overlapping scopes (or anything
+    vs a global entry) fail loudly. Conflict resolution is deliberately
+    CONSERVATIVE: on a simultaneous-acquire race, both writers see each
+    other and both back off (delete own entry, raise) — a rare both-fail
+    is safe and retryable, two winners never happen. The normal
+    sequential case needs no tie-break: the holder's entry exists first,
+    the latecomer sees it and fails.
 
     Liveness vs the lease (ADVICE r12): while held, a daemon heartbeat
     renews the entry's mtime every ``lease/3`` seconds, so a writer
@@ -1417,9 +1418,10 @@ class _WriterLock:
     raises on the success path if the entry was removed or replaced
     mid-operation — a concurrent writer may then have interleaved. A
     legacy single-file ``<base>__lock`` from an older writer is
-    honored (live blocks, stale clears). Atomic-create is the only FS
-    primitive required (HDFS/local native; object stores without it
-    get best-effort semantics, Delta's documented S3 caveat)."""
+    honored (live blocks, stale clears). Atomic create and rename are
+    the only FS primitives required (HDFS/local native; object stores
+    without them get best-effort semantics, Delta's documented S3
+    caveat)."""
 
     def __init__(self, spark: SparkSession, base: str,
                  lease_seconds: int = _LOCK_LEASE_SECONDS,
@@ -1536,11 +1538,20 @@ class _WriterLock:
             "created": _time.time(),
         }
         p = self._entry_path(jvm)
-        out = fs.create(p, False)  # owner-unique name; cannot pre-exist
+        # write under a non-.json temp name, then rename: a concurrent
+        # scan skips the temp and so never reads a half-written entry
+        tmp = Path(f"{self._dir()}/{self._owner}.tmp")
+        out = fs.create(tmp, False)  # owner-unique name; cannot pre-exist
         try:
             out.write(bytearray(json.dumps(doc).encode()))
         finally:
             out.close()
+        if not fs.rename(tmp, p):
+            fs.delete(tmp, False)
+            raise IOError(
+                f"could not publish writer lock entry {self._dir()}/"
+                f"{self._owner}.json"
+            )
         try:
             conflict = self._scan_conflict(jvm, fs)
         except Exception:
@@ -1583,8 +1594,10 @@ class _WriterLock:
                 continue
             other = self._read_entry(jvm, fs, st.getPath())
             if other is None:
-                # unreadable LIVE entry (mid-write or torn): treat as
-                # conflicting — the safe direction
+                if not fs.exists(st.getPath()):
+                    continue  # released between the listing and the read
+                # unreadable LIVE entry (torn): treat as conflicting —
+                # the safe direction
                 return name
             if self._intersects(other.get("scope")):
                 return name

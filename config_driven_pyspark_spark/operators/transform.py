@@ -27,10 +27,11 @@ behaviors pinned by tests in ``tests/test_transform.py``:
   custom registry.
 
 At scale this whole operator is a zero-shuffle narrow Project over whatever
-partitioning the input already has; Catalyst's ``OptimizeUpdateFields``
-collapses the chained ``UpdateFields`` nodes and whole-stage codegen fuses the
-expression tree, so cost is O(touched leaves) per row regardless of table
-width.
+partitioning the input already has, and whole-stage codegen fuses the
+expression tree. Plan size and per-row cost are O(touched leaves) regardless
+of table width because the lowering reads every sibling from its struct's
+input value and only chains the ``withField`` calls (``plans/lowering.py``);
+``drop_nested`` does the same.
 """
 
 from __future__ import annotations
@@ -123,10 +124,13 @@ class _DropNode:
 
 
 def _drop_value(ctx: Column, node: _DropNode) -> Column:
-    for leaf in node.drops:
-        ctx = ctx.dropFields(leaf)
+    # children read from the struct after this level's drops, never from one
+    # carrying a sibling's rewrite, which would double the tree per sibling
+    if node.drops:
+        ctx = ctx.dropFields(*node.drops)
+    base = ctx
     for name, child in node.children.items():
-        ctx = ctx.withField(name, _drop_wrap(ctx.getField(name), child.wrappers, child))
+        ctx = ctx.withField(name, _drop_wrap(base.getField(name), child.wrappers, child))
     return ctx
 
 

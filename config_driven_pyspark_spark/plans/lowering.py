@@ -20,6 +20,12 @@ Plan-shape choices, both deliberate:
 Untouched columns and untouched struct subtrees never enter the plan:
 roots without a PathNode pass through as bare ``F.col`` (parity with
 ``functioniser.py:91-93``; ``README.md:92``).
+
+Plan size is linear in the number of touched fields: every child of a
+struct is read from the struct's *input* value, and only the ``withField``
+calls chain. Reading a sibling from the already-rewritten struct would copy
+every earlier sibling's rewrite into it, doubling the expression tree per
+touched sibling until plan building exhausts the driver heap.
 """
 
 from __future__ import annotations
@@ -39,9 +45,14 @@ def _apply_at_value(ctx: Column, node: PathNode) -> Column:
     Child order: children first, then the node's own function, so a function
     configured on a struct path sees its transformed members (matches the
     reference's ``_apply`` tail order, ``functioniser.py:95-112``).
+
+    Children read from ``base``, the input value, not from ``ctx``: they are
+    distinct fields (keyed case-insensitively), so a ``withField`` on one
+    never changes another's value, and the tree stays linear in size.
     """
+    base = ctx
     for child in node.children.values():
-        ctx = ctx.withField(child.name, _lower_node(ctx.getField(child.name), child))
+        ctx = ctx.withField(child.name, _lower_node(base.getField(child.name), child))
     if node.function is not None:
         ctx = node.function(ctx)
     return ctx

@@ -19,6 +19,10 @@ from pyspark.sql import SparkSession
 #: - runtime bloom-filter join: a selective dim-side filter is pushed into
 #:   the fact scan as a bloom probe, cutting shuffle input for joins too
 #:   big to broadcast — the 100 TB case where it matters most
+#: - DataFrame call-site capture off: with it on, every wrapped PySpark call
+#:   makes extra driver↔JVM round trips to record the Python call site, and
+#:   for config-driven jobs that site is always engine code, never the
+#:   user's YAML, so the capture only costs time
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -27,6 +31,7 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": "128m",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -8,7 +8,13 @@ from pyspark.sql import functions as F
 
 from config_driven_pyspark_spark import Pipeline
 from config_driven_pyspark_spark.operators.transform import drop_nested
-from tests.conftest import to_df
+from tests.conftest import (
+    SIBLING_CONTAINERS,
+    analyzed_chars,
+    expected_sibling_rows,
+    sibling_frame,
+    to_df,
+)
 
 FIXTURE = [{
     "id": 1,
@@ -90,3 +96,48 @@ def test_drop_stage_routes_nested(spark):
     assert "props" not in out.columns
     info_fields = [f.name for f in out.schema["info"].dataType.fields]
     assert info_fields == ["etype"]
+
+
+def test_drop_struct_and_field_under_it_fails_analysis(spark):
+    # pinned behavior: dropping a struct and a field under it in one call
+    # is an analysis error (the child is read from the struct after the
+    # drop), whichever order the paths come in
+    from pyspark.errors import AnalysisException
+
+    df = to_df(spark, FIXTURE)
+    for paths in (["info.c", "info.c.junk"], ["info.c.junk", "info.c"],
+                  ["pets.face", "pets.face.eyes.size"]):
+        with pytest.raises(AnalysisException, match="FIELD_NOT_FOUND"):
+            drop_nested(df, paths)
+
+
+# -- plan size: linear in touched members ------------------------------------
+# Each of n sibling members of a struct loses its ``y``; the members are
+# read from the struct's input value, so the tree grows linearly in n.
+
+
+def _drop_siblings(spark, n, container):
+    df, prefix = sibling_frame(
+        spark, container, n, "struct<x: bigint, y: bigint>",
+        lambda rid, k, j, i: {"x": rid * 1000 + k * 100 + j * 50 + i, "y": -i},
+    )
+    paths = [f"{prefix}s{j}.f{i}.y" for j in range(2) for i in range(n)]
+    return df, drop_nested(df, paths)
+
+
+@pytest.mark.parametrize("container", SIBLING_CONTAINERS)
+def test_sibling_drop_plan_size_linear(spark, container):
+    _, out6 = _drop_siblings(spark, 6, container)
+    df12, out12 = _drop_siblings(spark, 12, container)
+    assert analyzed_chars(out12) < 3 * analyzed_chars(out6)
+    got = [r.asDict(recursive=True) for r in out12.orderBy("id").collect()]
+    assert got == expected_sibling_rows(
+        df12, container, lambda i, v: {"x": v["x"]}
+    )
+
+
+def test_ten_sibling_drops_plan_stays_small(spark):
+    _, out = _drop_siblings(spark, 10, "plain")
+    assert analyzed_chars(out) < 5000
+    row = out.orderBy("id").first()
+    assert row["s1"]["f9"].asDict() == {"x": 59}

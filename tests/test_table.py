@@ -1886,6 +1886,60 @@ def test_concurrent_disjoint_merges_both_commit(spark, tmp_path):
     ]
 
 
+def test_concurrent_disjoint_lock_acquires_never_conflict(spark, tmp_path):
+    """Disjoint scoped acquires racing in lockstep never see each other
+    as a conflict: an entry is published whole (temp name, then rename)
+    and one released between the scan's listing and its read is skipped.
+    Nothing is left in the lock directory afterwards."""
+    import os as _os
+    import threading
+
+    from config_driven_pyspark_spark.operators.table import _WriterLock
+
+    base = str(tmp_path / "t")
+    threads, rounds = 4, 25
+    barrier = threading.Barrier(threads, timeout=120)
+    errs: list = []
+
+    def run(i):
+        for _ in range(rounds):
+            try:
+                barrier.wait()
+                with _WriterLock(spark, base, scope=[f"bucket={i}"]):
+                    pass
+            except Exception as e:  # noqa: BLE001
+                errs.append(e)
+
+    workers = [threading.Thread(target=run, args=(i,)) for i in range(threads)]
+    for w in workers:
+        w.start()
+    for w in workers:
+        w.join()
+    assert not errs, errs[:3]
+    assert not [
+        f for f in _os.listdir(f"{base}__lock.d") if not f.startswith(".")
+    ]
+
+
+def test_torn_live_lock_entry_still_conflicts(spark, tmp_path):
+    """An entry that exists but cannot be parsed is treated as a live
+    conflict (the safe direction), whatever scope the acquirer asks for."""
+    import os as _os
+
+    import pytest as _pytest
+
+    from config_driven_pyspark_spark.operators.table import _WriterLock
+
+    base = str(tmp_path / "t")
+    _os.makedirs(f"{base}__lock.d")
+    with open(f"{base}__lock.d/torn.json", "w") as fh:
+        fh.write('{"owner": ')
+    with _pytest.raises(IOError, match="intersecting scope"):
+        with _WriterLock(spark, base, scope=["bucket=5"]):
+            pass
+    assert sorted(_os.listdir(f"{base}__lock.d")) == ["torn.json"]
+
+
 def test_versioned_tables_join_scoped_concurrency(spark, tmp_path):
     """History-enabled tables participate in scoped concurrency (r13:
     version allocation is CAS on the pending marker's atomic create):

@@ -15,7 +15,13 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from config_driven_pyspark_spark import NestedTransformer
-from tests.conftest import to_df
+from tests.conftest import (
+    SIBLING_CONTAINERS,
+    analyzed_chars,
+    expected_sibling_rows,
+    sibling_frame,
+    to_df,
+)
 
 
 PEOPLE = [
@@ -419,3 +425,40 @@ def test_readme_yaml_example_config_drives_pipeline(spark):
     assert row["a"] == "padded"
     assert row["b"] == "long"
     assert row["c"] == "foo"
+
+
+# -- plan size: linear in touched fields -------------------------------------
+# Siblings are read from their struct's input value, so each touched leaf
+# adds a constant amount of expression tree. Reading a sibling from the
+# already-rewritten struct doubled the tree per sibling instead.
+
+
+def _touch_siblings(spark, n, container):
+    df, prefix = sibling_frame(
+        spark, container, n, "bigint",
+        lambda rid, k, j, i: rid * 1000 + k * 100 + j * 50 + i,
+    )
+    t = NestedTransformer()
+    for j in range(2):
+        for i in range(n):
+            t.add(f"{prefix}s{j}.f{i}", lambda c, i=i: c * 2 + i)
+    return df, t.apply(df)
+
+
+@pytest.mark.parametrize("container", SIBLING_CONTAINERS)
+def test_sibling_plan_size_linear(spark, container):
+    _, out6 = _touch_siblings(spark, 6, container)
+    df12, out12 = _touch_siblings(spark, 12, container)
+    assert analyzed_chars(out12) < 3 * analyzed_chars(out6)
+    assert collect_sorted(out12) == expected_sibling_rows(
+        df12, container, lambda i, v: v * 2 + i
+    )
+
+
+def test_ten_touched_siblings_plan_stays_small(spark):
+    # 2 structs x 10 touched leaves: the doubling lowering built a plan of
+    # about 150 KB here, growing 4x per further leaf in each struct
+    _, out = _touch_siblings(spark, 10, "plain")
+    assert analyzed_chars(out) < 5000
+    row = out.orderBy("id").first()
+    assert row["s1"]["f9"] == 59 * 2 + 9
